@@ -181,21 +181,6 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(text: Column, num_perm: int = 32, k: int = 3) -> Column:
-    """num_perm-wide MinHash signature: permutation i is simulated by
-    xxhash64(shingle, i); min over shingles.  Pure Column algebra.
-
-    Built as ONE ``transform(sequence(...))`` expression — a Python loop
-    of per-permutation columns would clone the whole shingle
-    subexpression num_perm times (projection collapse does not CSE it),
-    exploding codegen size and analysis time."""
-    sh = shingles(text, k)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_perm - 1)),
-        lambda i: F.array_min(F.transform(sh, lambda s: F.xxhash64(s, i))),
-    )
-
-
 def minhash_signature_df(df: DataFrame, id_col: str, text_col: str,
                          num_perm: int = 32, k: int = 3) -> DataFrame:
     """(id, _h0.._hN) MinHash signature via explode → per-permutation
@@ -354,14 +339,6 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
         "band", "bhash", F.col("_id").alias("id_b")
     ).join(heads, ["band", "bhash"]).select("id_a", "id_b")
     return pairs.unionByName(overflow_pairs).distinct()
-
-
-def minhash_duplicate_groups(df: DataFrame, id_col: str, text_col: str,
-                             threshold: float = 0.8, **lsh_kw) -> DataFrame:
-    """Verified near-dup pairs with their Jaccard (the dedup decision
-    input: keep min(id) per connected component — one union-find pass
-    on the pair list, which is tiny relative to the corpus)."""
-    return ngram_jaccard_pairs(df, id_col, text_col, threshold=threshold)
 
 
 def _free_local_checkpoint(df: DataFrame) -> None:
@@ -1229,8 +1206,8 @@ def compact_epoch_store(spark, store_dir: str, tables: tuple[str, ...],
              .write.mode("overwrite").parquet(f"{tmp}/{table}"))
     # the _SUCCESS of this one-row write IS the commit point: before
     # it, recovery rolls back; after it, recovery rolls forward
-    from ..plans.checkpoint import one_row_df
-    one_row_df(spark, "upto int", (int(upto),)) \
+    from ..plans.checkpoint import literal_rows_df
+    literal_rows_df(spark, "upto int", [(int(upto),)]) \
         .coalesce(1).write.mode("overwrite") \
         .parquet(f"{store_dir}/_compact")
     _compact_finalize(spark, store_dir, tables, upto)

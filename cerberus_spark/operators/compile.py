@@ -92,11 +92,6 @@ def null_string() -> Column:
     return _memo_const("null_string", lambda: F.lit(None).cast("string"))
 
 
-def _null_violation() -> Column:
-    return _memo_const("null_violation",
-                       lambda: F.lit(None).cast(E.VIOLATION_STRUCT))
-
-
 def stringify(col: Column, dtype: T.DataType | None) -> Column:
     """Serialize a value column to its string form for the violation row."""
     if dtype is None:

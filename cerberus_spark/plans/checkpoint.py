@@ -1,9 +1,10 @@
-"""Resumable validation runs: per-partition checkpoint + lineage.
+"""Resumable validation runs (per-partition checkpoint + lineage), and
+the one seam every small artifact is read and written through.
 
-North-rule requirement: "resumable from checkpoint with per-partition
-lineage + metrics".  Each validation run partitions the input by a
-stable hash of the conversation id, records one checkpoint row per
-finished partition —
+Checkpoint.  North-rule requirement: "resumable from checkpoint with
+per-partition lineage + metrics".  Each validation run partitions the
+input by a stable hash of the conversation id, records one checkpoint
+row per finished partition —
 
     checkpoint(part_id int, snapshot_id string, rule_schema_hash string,
                predicate_set string, status string, n_turns long,
@@ -14,18 +15,42 @@ finished partition —
 changed input invalidates the old rows by construction (lineage
 mismatch), which is exactly the reference's schema-hash cache idea
 (validator.py:136-140, utils.py:57-84) promoted to a durable table.
+Storage is a parquet append-dir: each commit adds one file, so a
+commit is atomic.
 
-Storage is a parquet append-dir here (works against any filesystem);
-swap to an Iceberg table transparently when its catalog is configured.
-All existence probes go through the Hadoop FileSystem API — os.path
-would silently return False for s3a://, hdfs://, abfs:// paths and
-quietly degrade resume to a full re-run.
+Artifact I/O seam.  Checkpoint tables, per-partition summaries and
+the one-row meta rows of the stores and models are a few KB each, and
+a Spark job to read or write one costs 0.1-0.8 s of pure scheduling.
+So all of them go through one reader (``read_local_rows``) and one
+writer (``_write_rows``), and ``_local_fs_path`` makes the
+local-or-remote choice for both:
+
+* a ``file:`` path is read and written driver-side with pyarrow
+  (writes land as a tmp file renamed into place);
+* any other scheme (s3a:, hdfs:, abfs:, gs:) takes the Spark read or a
+  Spark write of rows built JVM-side from literals.
+
+Both branches write the same parquet column types, and read errors
+propagate — an I/O failure never turns into an empty result.
+Existence probes, listings, deletes and renames go through the Hadoop
+FileSystem bound to the path's scheme: os.path would silently answer
+False for s3a://, hdfs://, abfs:// paths and quietly degrade resume to
+a full re-run.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
+import os
+import shutil
+import uuid
+from contextlib import contextmanager
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 CHECKPOINT_SCHEMA = (
@@ -34,154 +59,151 @@ CHECKPOINT_SCHEMA = (
     "n_violations long, finished_ts timestamp"
 )
 
+#: the DDL column types an artifact may carry, with the Arrow type the
+#: local writer stores for each (the parquet type Spark writes for it)
+_ARROW_TYPES = {
+    "int": pa.int32(), "integer": pa.int32(),
+    "bigint": pa.int64(), "long": pa.int64(),
+    "double": pa.float64(), "float": pa.float32(),
+    "string": pa.string(), "boolean": pa.bool_(),
+    "timestamp": pa.timestamp("us", tz="UTC"),
+}
 
-def one_row_df(spark: SparkSession, schema: str, values):
-    """One-row DataFrame of scalar literals built JVM-side
-    (``spark.range(1)`` + casts).  ``createDataFrame`` on local rows
-    parallelizes a PICKLED Python partition, so every action on it —
-    even writing a one-row store-meta artifact — pays a Python worker
-    round-trip: measured 5.7 s vs 0.3 s for the band-store meta row on
-    this sandbox.  Scalar columns only (int/long/double/string/
-    boolean); the cast pins each column to exactly the type the schema
-    string names, so readers see the identical parquet schema."""
-    from pyspark.sql import functions as F
 
-    cols = []
-    for spec, v in zip(schema.split(","), values):
+def _ddl_fields(schema: str) -> list[tuple[str, str]]:
+    """(name, type) pairs of a flat DDL schema string.  Raises on a
+    type outside ``_ARROW_TYPES``."""
+    fields = []
+    for spec in schema.split(","):
         name, typ = spec.strip().split(None, 1)
-        cols.append(F.lit(v).cast(typ).alias(name))
-    return spark.range(1).select(*cols)
+        typ = typ.strip().lower()
+        if typ not in _ARROW_TYPES:
+            raise ValueError(
+                f"artifact column {name!r} has type {typ!r}; supported: "
+                f"{', '.join(sorted(_ARROW_TYPES))}")
+        fields.append((name, typ))
+    return fields
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path``, the FileSystem bound to its
+    scheme under the session's Hadoop configuration."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    return hpath.getFileSystem(conf), hpath
+
+
+def _local_fs_path(spark: SparkSession, path: str) -> str | None:
+    """The local-or-remote decision of every artifact read and write:
+    the os-level path when ``path``'s Hadoop filesystem is ``file:``,
+    else None (the caller takes its Spark branch)."""
+    fs, _ = _hadoop_fs(spark, path)
+    if fs.getUri().getScheme() != "file":
+        return None
+    for prefix in ("file://", "file:"):
+        if path.startswith(prefix):
+            return path[len(prefix):]
+    return path
+
+
+def literal_rows_df(spark: SparkSession, schema: str, rows) -> DataFrame:
+    """DataFrame of scalar literal ``rows`` (tuples in ``schema``
+    order) built JVM-side: ``inline`` over an array of literal
+    structs.  ``createDataFrame`` on local rows parallelizes a PICKLED
+    Python partition, so every action on it — even writing a one-row
+    store-meta artifact — pays a Python worker round-trip: measured
+    5.7 s vs 0.3 s for the band-store meta row.  The cast pins each
+    column to exactly the type the schema string names, so readers see
+    the identical parquet schema."""
+    fields = _ddl_fields(schema)
+    structs = [F.struct(*[F.lit(v).cast(typ).alias(name)
+                          for (name, typ), v in zip(fields, row)])
+               for row in rows]
+    return spark.range(1).select(F.inline(F.array(*structs)))
+
+
+def read_local_rows(spark: SparkSession, path: str,
+                    columns: list[str] | None = None) -> list[dict]:
+    """The rows of a SMALL parquet dir (a per-partition summary, a
+    checkpoint table, a meta row) as dicts — partition dirs
+    (``part_id=N``) included as columns, same as a Spark read.
+    ``columns`` selects those of the named columns the table has.
+
+    [] when the path is absent or holds no data files (a zero-row
+    partitioned write leaves only ``_SUCCESS``).  A local path is read
+    driver-side with pyarrow: a Spark read of such a table costs a
+    partition-listing job plus a scan job, ~0.5-0.8 s of scheduling
+    around a few KB (measured on the flagship's 64-row summary).  Any
+    other scheme runs the Spark read.  Read errors propagate.  NOT for
+    big tables: the result materializes on the driver."""
+    if not [n for n in fs_list(spark, path) if n[0] not in "_."]:
+        return []
+    local = _local_fs_path(spark, path)
+    if local is not None:
+        ds = pads.dataset(local, format="parquet", partitioning="hive")
+        if columns is not None:
+            columns = [c for c in columns if c in ds.schema.names]
+        return ds.to_table(columns=columns).to_pylist()
+    df = spark.read.parquet(path)
+    if columns is not None:
+        df = df.select(*[c for c in columns if c in df.columns])
+    return [r.asDict() for r in df.collect()]
 
 
 def read_one_row(spark: SparkSession, path: str,
                  schema: str | None = None) -> dict | None:
-    """Read a ONE-ROW parquet artifact (store/model meta rows, commit
-    markers) as a plain dict.
+    """The row of a ONE-ROW parquet artifact (store/model meta rows,
+    commit markers) as a dict; None when it holds no rows.  With
+    ``schema`` (a DDL string), columns the file lacks come back as None
+    — the same contract as a schema'd Spark read."""
+    rows = read_local_rows(spark, path)
+    if not rows:
+        return None
+    if schema is None:
+        return rows[0]
+    return {name: rows[0].get(name) for name, _ in _ddl_fields(schema)}
 
-    On a local filesystem the row is read driver-side with pyarrow —
-    a Spark job for one row costs ~0.1 s of pure scheduling (measured;
-    the store probe pays it on every call).  Any other scheme, a
-    multi-file dir, or a multi-row file falls back to the normal Spark
-    read.  With ``schema`` (a DDL string), columns the file lacks come
-    back as None — the same contract as a schema'd Spark read.
-    Returns None for an empty artifact."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if fs.getUri().getScheme() == "file":
-        parts = [n for n in fs_list(spark, path) if n.endswith(".parquet")]
-        if len(parts) == 1:
-            local = path
-            if local.startswith("file://"):
-                local = local[len("file://"):]
-            elif local.startswith("file:"):
-                local = local[len("file:"):]
-            import pyarrow.parquet as pq
-            rows = pq.read_table(f"{local}/{parts[0]}").to_pylist()
-            if len(rows) == 1:
-                d = rows[0]
-                if schema is not None:
-                    names = [s.strip().split(None, 1)[0]
-                             for s in schema.split(",")]
-                    d = {n: d.get(n) for n in names}
-                return d
-    rd = spark.read if schema is None else spark.read.schema(schema)
-    r = rd.parquet(path).first()
-    return None if r is None else r.asDict()
+
+def _write_rows(spark: SparkSession, path: str, schema: str, rows,
+                mode: str) -> None:
+    """Write a few ``rows`` (tuples in ``schema`` order) to the parquet
+    dir ``path`` with the column types the DDL ``schema`` names.
+    ``mode`` is "overwrite" (replace the dir) or "append" (add one
+    file).
+
+    Local: pyarrow writes a tmp file and renames it into place, so a
+    reader never sees a half-written file.  A crash between the two
+    leaves a dot-prefixed tmp file that readers skip; the next write
+    removes it.  Remote: one Spark write of ``literal_rows_df``."""
+    local = _local_fs_path(spark, path)
+    if local is None:
+        literal_rows_df(spark, schema, rows) \
+            .coalesce(1).write.mode(mode).parquet(path)
+        return
+    fields = _ddl_fields(schema)
+    if mode == "overwrite":
+        if os.path.exists(local):
+            shutil.rmtree(local)
+        final = "part-00000.parquet"
+    else:
+        final = f"part-{uuid.uuid4().hex[:12]}.parquet"
+    os.makedirs(local, exist_ok=True)
+    for stale in glob.glob(os.path.join(local, ".part-*.tmp")):
+        os.remove(stale)
+    tbl = pa.table([pa.array([row[i] for row in rows], _ARROW_TYPES[typ])
+                    for i, (_, typ) in enumerate(fields)],
+                   names=[name for name, _ in fields])
+    tmp = os.path.join(local, f".part-{uuid.uuid4().hex[:12]}.tmp")
+    pq.write_table(tbl, tmp)
+    os.rename(tmp, os.path.join(local, final))
 
 
 def write_one_row(spark: SparkSession, path: str, schema: str,
                   values) -> None:
-    """Write a ONE-ROW parquet artifact (store/model meta rows) with
-    the exact column types the DDL ``schema`` names.
-
-    On a local filesystem the row is written driver-side with pyarrow
-    (tmp file + rename; a Spark job for one row costs ~0.12 s of pure
-    scheduling) — the file parquet-identical in schema to the
-    ``one_row_df`` Spark write, so either reader works on either
-    artifact.  Non-local schemes and types outside the scalar set fall
-    back to the Spark write.  NOT for commit markers: those rely on
-    the Spark committer's ``_SUCCESS`` as the commit point."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if fs.getUri().getScheme() == "file":
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        _PA = {"int": pa.int32(), "integer": pa.int32(),
-               "bigint": pa.int64(), "long": pa.int64(),
-               "double": pa.float64(), "float": pa.float32(),
-               "string": pa.string(), "boolean": pa.bool_()}
-        names, types = [], []
-        for spec in schema.split(","):
-            name, typ = spec.strip().split(None, 1)
-            names.append(name)
-            types.append(_PA.get(typ.strip().lower()))
-        if all(t is not None for t in types):
-            local = path
-            if local.startswith("file://"):
-                local = local[len("file://"):]
-            elif local.startswith("file:"):
-                local = local[len("file:"):]
-            import os
-            import uuid
-            fs_delete(spark, path)
-            os.makedirs(local, exist_ok=True)
-            tbl = pa.table({n: pa.array([v], type=t)
-                            for n, t, v in zip(names, types, values)})
-            tmp = f"{local}/.part-{uuid.uuid4().hex[:12]}.tmp"
-            pq.write_table(tbl, tmp)
-            os.rename(tmp, f"{local}/part-00000.parquet")
-            return
-    one_row_df(spark, schema, values) \
-        .coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def _local_fs_path(spark: SparkSession, path: str) -> str | None:
-    """Return the os-level path when ``path``'s Hadoop filesystem is
-    ``file:``, else None (the caller falls back to Spark)."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if fs.getUri().getScheme() != "file":
-        return None
-    local = path
-    if local.startswith("file://"):
-        local = local[len("file://"):]
-    elif local.startswith("file:"):
-        local = local[len("file:"):]
-    return local
-
-
-def read_local_rows(spark: SparkSession, path: str,
-                    columns: list[str] | None = None) -> list[dict] | None:
-    """Driver-side pyarrow read of a SMALL parquet dir (a per-partition
-    summary, a checkpoint table) as a list of dicts — partition dirs
-    (``part_id=N``) included as columns, same as a Spark read.
-
-    A Spark read of such a table costs a distributed partition-listing
-    job (its dir count crosses the 32-path parallel-discovery
-    threshold) plus a scan job — ~0.5-0.8 s of pure scheduling around a
-    few KB of data (measured on the flagship's 64-row summary).  Local
-    ``file:`` filesystems skip all of it; any other scheme or a read
-    error returns None and the caller falls back to the Spark read.
-    NOT for big tables: the result materializes on the driver."""
-    local = _local_fs_path(spark, path)
-    if local is None:
-        return None
-    try:
-        import pyarrow.dataset as pads
-        ds = pads.dataset(local, format="parquet",
-                          partitioning="hive")
-        cols = columns
-        if cols is not None:
-            cols = [c for c in cols if c in ds.schema.names]
-        return ds.to_table(columns=cols).to_pylist()
-    except Exception:
-        return None
-
-
-from contextlib import contextmanager
+    """Replace the ONE-ROW parquet artifact at ``path`` (store/model
+    meta rows).  NOT for commit markers: those rely on the Spark
+    committer's ``_SUCCESS`` as the commit point."""
+    _write_rows(spark, path, schema, [values], "overwrite")
 
 
 @contextmanager
@@ -196,10 +218,7 @@ def sequential_listing(spark: SparkSession, path: str):
     bucketed store table).  Not thread-safe: flips a session-level SQL
     conf for the duration (single-threaded probe/compaction paths
     only)."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if fs.getUri().getScheme() != "file":
+    if _local_fs_path(spark, path) is None:
         yield
         return
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
@@ -220,18 +239,14 @@ def sequential_listing(spark: SparkSession, path: str):
 def fs_exists(spark: SparkSession, path: str) -> bool:
     """Existence probe via the Hadoop FileSystem bound to ``path``'s
     scheme — correct for local, file:, hdfs:, s3a:, abfs:, gs: alike."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_fs(spark, path)
     return bool(fs.exists(hpath))
 
 
 def fs_delete(spark: SparkSession, path: str) -> None:
     """Recursive delete via the Hadoop FileSystem bound to ``path``'s
     scheme (no-op when the path does not exist)."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_fs(spark, path)
     if fs.exists(hpath):
         fs.delete(hpath, True)
 
@@ -241,18 +256,15 @@ def fs_rename(spark: SparkSession, src: str, dst: str) -> None:
     posix local filesystems; object stores emulate it — callers needing
     true atomicity there should sit behind a table catalog).  Raises if
     the rename is refused (e.g. destination exists)."""
-    jvm = spark.sparkContext._jvm
-    hsrc = jvm.org.apache.hadoop.fs.Path(src)
-    fs = hsrc.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if not fs.rename(hsrc, jvm.org.apache.hadoop.fs.Path(dst)):
+    fs, hsrc = _hadoop_fs(spark, src)
+    hdst = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(dst)
+    if not fs.rename(hsrc, hdst):
         raise IOError(f"rename {src} -> {dst} refused by the filesystem")
 
 
 def fs_list(spark: SparkSession, path: str) -> list[str]:
     """Child names (not full paths) of a directory; [] if absent."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return []
     return [st.getPath().getName() for st in fs.listStatus(hpath)]
@@ -287,86 +299,28 @@ class CheckpointStore:
         self.spark = spark
         self.path = path
 
-    def read(self) -> DataFrame:
-        if not fs_exists(self.spark, self.path):
-            return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
-        return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
-
     def done_partitions(self, snapshot: str, schema_hash: str,
                         predicate_set: str = "") -> list[int]:
-        rows = (
-            self.read()
-            .filter(
-                (F.col("status") == "done")
-                & (F.col("snapshot_id") == snapshot)
-                & (F.col("rule_schema_hash") == schema_hash)
-                & (F.col("predicate_set") == predicate_set)
-            )
-            .select("part_id")
-            .distinct()
-            .collect()
-        )
-        return sorted(r.part_id for r in rows)
+        """Partitions committed 'done' under this lineage."""
+        want = ("done", snapshot, schema_hash, predicate_set)
+        rows = read_local_rows(
+            self.spark, self.path,
+            columns=["part_id", "status", "snapshot_id",
+                     "rule_schema_hash", "predicate_set"])
+        return sorted({r["part_id"] for r in rows
+                       if (r["status"], r["snapshot_id"],
+                           r["rule_schema_hash"],
+                           r["predicate_set"]) == want})
 
     def commit_rows(self, rows: list[dict], snapshot: str,
-                    schema_hash: str, predicate_set: str = "") -> bool:
-        """Driver-side append of 'done' rows (dicts with part_id,
-        n_rows, n_failed, n_violations) — the ``commit`` fast path for
-        LOCAL checkpoint dirs.  The row count is the partition count
-        (≤ n_parts), so a Spark job here is pure scheduling overhead;
-        the parquet file written is schema-identical to the Spark
-        append (CHECKPOINT_SCHEMA types, timestamp in UTC micros) so
-        ``read``/``done_partitions`` see one table.  Returns False
-        (nothing written) when the store is not on a local ``file:``
-        filesystem — the caller falls back to the Spark append."""
-        local = _local_fs_path(self.spark, self.path)
-        if local is None:
-            return False
-        import os
-        import uuid
-        from datetime import datetime, timezone
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
+                    schema_hash: str, predicate_set: str = "") -> None:
+        """Append one 'done' row per entry of ``rows`` (dicts with
+        part_id, n_rows, n_failed, n_violations) as ONE file — the
+        commit is atomic.  No-op for no rows."""
+        if not rows:
+            return
         now = datetime.now(timezone.utc)
-        tbl = pa.table({
-            "part_id": pa.array([int(r["part_id"]) for r in rows],
-                                pa.int32()),
-            "snapshot_id": pa.array([snapshot] * len(rows), pa.string()),
-            "rule_schema_hash": pa.array([schema_hash] * len(rows),
-                                         pa.string()),
-            "predicate_set": pa.array([predicate_set] * len(rows),
-                                      pa.string()),
-            "status": pa.array(["done"] * len(rows), pa.string()),
-            "n_turns": pa.array([int(r["n_rows"]) for r in rows],
-                                pa.int64()),
-            "n_failed": pa.array([int(r["n_failed"]) for r in rows],
-                                 pa.int64()),
-            "n_violations": pa.array([int(r["n_violations"]) for r in rows],
-                                     pa.int64()),
-            "finished_ts": pa.array([now] * len(rows),
-                                    pa.timestamp("us", tz="UTC")),
-        })
-        os.makedirs(local, exist_ok=True)
-        tmp = f"{local}/.part-{uuid.uuid4().hex[:12]}.tmp"
-        pq.write_table(tbl, tmp)
-        os.rename(tmp, f"{local}/part-{uuid.uuid4().hex[:12]}.parquet")
-        return True
-
-    def commit(self, per_part_summary: DataFrame, snapshot: str, schema_hash: str,
-               predicate_set: str = "") -> None:
-        """Append 'done' rows from a summary df (part_id, n_rows, n_failed,
-        n_violations)."""
-        out = per_part_summary.select(
-            F.col("part_id").cast("int"),
-            F.lit(snapshot).alias("snapshot_id"),
-            F.lit(schema_hash).alias("rule_schema_hash"),
-            F.lit(predicate_set).alias("predicate_set"),
-            F.lit("done").alias("status"),
-            F.col("n_rows").cast("long").alias("n_turns"),
-            F.col("n_failed").cast("long"),
-            F.col("n_violations").cast("long"),
-            F.current_timestamp().alias("finished_ts"),
-        )
-        out.write.mode("append").parquet(self.path)
+        _write_rows(self.spark, self.path, CHECKPOINT_SCHEMA, [
+            (r["part_id"], snapshot, schema_hash, predicate_set, "done",
+             r["n_rows"], r["n_failed"], r["n_violations"], now)
+            for r in rows], "append")

@@ -17,10 +17,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def plan_report(df: DataFrame) -> dict:
     """Summarize scale-relevant plan properties."""
     plan = physical_plan(df)

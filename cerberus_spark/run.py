@@ -5,7 +5,8 @@ One pass over the transcripts table computes (north star):
 
 1. per-turn rule violations + normalized columns  (single projection)
 2. per-partition pass/fail summary                (one groupBy)
-3. uniqueness of (conv_id, turn_idx)              (salted two-stage agg)
+3. uniqueness of (conv_id, turn_idx)              (partial-aggregated
+                                                   groupBy count)
 4. referential conv_id ⋉ conversations            (anti join, AQE-chosen)
 5. ts-ordering per conversation                   (window after
                                                    repartition(conv_id))
@@ -198,39 +199,15 @@ class ValidationRun:
 
         # -- report from the durable summary (covers all partitions,
         # this run's and previously committed ones alike).  An empty
-        # input writes no summary part files (a partitioned write of
-        # zero rows leaves only _SUCCESS), so fall back to zeros.
-        # Local out_dirs sum the ≤ n_parts summary rows driver-side
-        # (see _run_validation_waves — same rationale, same fallback).
-        summary_rows = read_local_rows(
-            spark, self._path("summary"),
-            columns=["lineage", "n_rows", "n_failed", "n_violations"])
-        if summary_rows is not None:
-            if summary_rows and "lineage" in summary_rows[0]:
-                summary_rows = [r for r in summary_rows
-                                if r["lineage"] == lineage]
-            totals = (
-                sum(r["n_rows"] or 0 for r in summary_rows),
-                sum(r["n_failed"] or 0 for r in summary_rows),
-                sum(r["n_violations"] or 0 for r in summary_rows),
-            )
-        else:
-            try:
-                summary = spark.read.parquet(self._path("summary"))
-                if "lineage" in summary.columns:
-                    summary = summary.filter(F.col("lineage") == lineage)
-                totals = (
-                    summary
-                    .agg(F.sum("n_rows"), F.sum("n_failed"),
-                         F.sum("n_violations"))
-                    .first()
-                )
-            except Exception:
-                totals = (0, 0, 0)
+        # input writes no summary rows, so its totals are zero.
+        summary = self._summary_rows(spark, lineage)
+        n_turns, n_failed, n_violations = (
+            sum(r[c] or 0 for r in summary)
+            for c in ("n_rows", "n_failed", "n_violations"))
         return RunReport(
-            n_turns=int(totals[0] or 0),
-            n_failed=int(totals[1] or 0),
-            n_rule_violations=int(totals[2] or 0),
+            n_turns=n_turns,
+            n_failed=n_failed,
+            n_rule_violations=n_violations,
             n_unique_violations=ds_counts.get(E.NOT_UNIQUE.code, 0),
             n_orphan_violations=ds_counts.get(E.ORPHAN_REFERENCE.code, 0),
             n_ordering_violations=ds_counts.get(E.ORDERING_VIOLATION.code, 0),
@@ -345,49 +322,30 @@ class ValidationRun:
                               .partitionBy("part_id")
                               .parquet(self._path("annotated")))
 
-                # checkpoint commit for THIS wave, from the durable files —
-                # committed state always describes data that is on disk.
-                # A wave with zero rows writes no readable part files;
+                # checkpoint commit for THIS wave, from the durable
+                # summary — committed state always describes data that is
+                # on disk.  A wave with zero rows has no summary rows;
                 # nothing to commit (the empty partitions cost nothing to
                 # revisit).
-                # Local out_dirs take the driver-side path: the summary
-                # is ≤ n_parts one-row files, so the Spark read costs a
-                # partition-discovery job + a scan job and the commit a
-                # write job — ~0.7 s of scheduling around a few KB
-                # (guide §5: no cluster jobs for driver-sized data).
-                # Any non-local scheme falls back to the Spark plan.
-                committed_rows = read_local_rows(
-                    spark, self._path("summary"),
-                    columns=["part_id", "lineage", "n_rows", "n_failed",
-                             "n_violations"])
-                done_driver_side = False
-                if committed_rows is not None:
-                    wset = set(wave_parts)
-                    has_lineage = bool(committed_rows) \
-                        and "lineage" in committed_rows[0]
-                    rows = [r for r in committed_rows
-                            if r["part_id"] in wset
-                            and (not has_lineage
-                                 or r["lineage"] == lineage)]
-                    done_driver_side = (not rows) or store.commit_rows(
-                        rows, snap, shash, predicate_set)
-                if not done_driver_side:
-                    committed = None
-                    try:
-                        committed = (
-                            spark.read.parquet(self._path("summary"))
-                            .filter(F.col("part_id").isin(wave_parts))
-                        )
-                        if "lineage" in committed.columns:
-                            committed = committed.filter(
-                                F.col("lineage") == lineage)
-                    except Exception:
-                        pass
-                    if committed is not None:
-                        store.commit(committed, snap, shash, predicate_set)
+                wset = set(wave_parts)
+                store.commit_rows(
+                    [r for r in self._summary_rows(spark, lineage)
+                     if r["part_id"] in wset],
+                    snap, shash, predicate_set)
             finally:
                 if cfg.persist:
                     annotated.unpersist()
+
+    def _summary_rows(self, spark, lineage: str) -> list[dict]:
+        """The durable summary's rows stamped with ``lineage`` — at most
+        n_parts rows, read through the artifact seam
+        (plans/checkpoint.py).  Rows of a summary written before the
+        lineage stamp carry no lineage column and count as this run's."""
+        rows = read_local_rows(
+            spark, self._path("summary"),
+            columns=["part_id", "lineage", "n_rows", "n_failed",
+                     "n_violations"])
+        return [r for r in rows if r.get("lineage", lineage) == lineage]
 
     def _run_dataset_checks(self, spark, df, conversations) -> dict[int, int]:
         cfg = self.config

@@ -25,3 +25,23 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def remote_io(monkeypatch):
+    """Send every artifact read and write down the Spark branch of the
+    artifact-I/O seam (plans/checkpoint.py) — the branch s3a:, hdfs:
+    and other non-local filesystems take — by making the seam's
+    local-or-remote decision answer "remote" for ``file:`` paths too."""
+    from cerberus_spark.plans import checkpoint
+
+    monkeypatch.setattr(checkpoint, "_local_fs_path",
+                        lambda spark, path: None)
+
+
+@pytest.fixture(params=["local", "remote"])
+def io_mode(request):
+    """Run a test once per branch of the artifact-I/O seam."""
+    if request.param == "remote":
+        request.getfixturevalue("remote_io")
+    return request.param

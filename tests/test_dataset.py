@@ -235,27 +235,49 @@ def test_stats_bound_violations(spark, data):
     assert all(r["code"] == 0x105 for r in got)
 
 
-def test_salted_counts_equal_plain_counts_fuzz(spark):
-    """The salted two-stage aggregation is EXACTLY the plain groupBy
-    count for any key distribution (including a pathological hot key)
-    and any salt width — fuzzed over random multiplicities."""
-    import random
+def test_empty_file_backed_input_reports_zero_counts(spark, io_mode,
+                                                     tmp_path):
+    """An empty input writes no summary rows: a single-wave run writes
+    an empty summary file, a waved run only ``_SUCCESS``.  Both report
+    all-zero counts, fresh and fully resumed."""
+    from cerberus_spark.sources.transcripts import write_dataset, load
 
-    from cerberus_spark.operators.dataset import salted_counts
-    from pyspark.sql import functions as SF
+    data_dir = str(tmp_path / "data")
+    write_dataset(data_dir, 100, seed=5)
+    t, c = load(spark, data_dir)
+    t.limit(0).write.parquet(str(tmp_path / "empty"))
+    empty = spark.read.parquet(str(tmp_path / "empty"))
+    for waves in (1, 2):
+        cfg = RunConfig(out_dir=str(tmp_path / f"out{waves}"), n_parts=4,
+                        waves=waves)
+        for _ in range(2):  # fresh, then fully resumed
+            r = ValidationRun(TURN_SCHEMA, cfg).execute(empty, c)
+            assert (r.n_turns, r.n_failed, r.n_rule_violations,
+                    r.n_unique_violations, r.n_orphan_violations,
+                    r.n_ordering_violations) == (0, 0, 0, 0, 0, 0), waves
 
-    rng = random.Random(11)
-    rows = []
-    for k in range(40):
-        mult = rng.choice([1, 1, 1, 2, 3, 7, 500 if k == 0 else 1])
-        rows += [(f"k{k}", i % 5) for i in range(mult)]
-    df = spark.createDataFrame(rows, "a string, b int").repartition(7)
-    for n_salt in (1, 4, 16):
-        salted = {tuple(r[:2]): r["n"]
-                  for r in salted_counts(df, ["a", "b"], n_salt).collect()}
-        plain = {tuple(r[:2]): r["n"] for r in
-                 df.groupBy("a", "b").agg(SF.count(SF.lit(1)).alias("n")).collect()}
-        assert salted == plain, n_salt
+
+def test_resumed_run_with_corrupt_summary_raises(spark, io_mode, tmp_path):
+    """A fully resumed run reports from the durable summary; when that
+    summary cannot be read the run fails — it never reports zero
+    turns."""
+    import glob
+
+    from cerberus_spark.sources.transcripts import write_dataset, load
+
+    data_dir = str(tmp_path / "data")
+    out = str(tmp_path / "out")
+    write_dataset(data_dir, 500, seed=3)
+    t, c = load(spark, data_dir)
+    cfg = RunConfig(out_dir=out, n_parts=4)
+    assert ValidationRun(TURN_SCHEMA, cfg).execute(t, c).n_turns == 500
+    parts = glob.glob(f"{out}/summary/part-*.parquet")
+    assert parts
+    for p in parts:
+        with open(p, "wb") as f:
+            f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        ValidationRun(TURN_SCHEMA, cfg).execute(t, c)
 
 
 def test_failed_waves_do_not_commit_drift_baseline(spark):
